@@ -96,7 +96,7 @@ def _load_graph(spark, store: str):
     )
     adj.count()
     nodes.count()
-    return GraphTables(nodes=nodes, adj=adj, **meta)
+    return GraphTables(nodes=nodes, adj=adj, partitions=p, **meta)
 
 
 def _pagerank_run(spark, sf_dir):

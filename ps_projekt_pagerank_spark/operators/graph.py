@@ -7,12 +7,13 @@ All relational, all shuffle-aware:
   trusted).
 - G2 out-degree: hash agg with automatic partial (map-side) combine
   (reference Graph.cpp:95-96 increments per occurrence → count(*)).
-- G3 adjacency: the scatter-side edge table, repartitioned ONCE by src and
-  persisted — the Spark analogue of the reference's build-once CSR
-  (Graph4CL.cpp:16-46): every PageRank iteration reuses this partitioning,
-  so per-iteration shuffles touch only the |V|-row rank state, never the
-  |E|-row edge table (at local scale Catalyst broadcasts the rank state
-  instead, which eliminates even that).
+- G3 adjacency: the scatter-side edge table, repartitioned ONCE by src
+  into ``partitions`` buckets and persisted — the Spark analogue of the
+  reference's build-once CSR (Graph4CL.cpp:16-46). PageRank hash-partitions
+  its |V|-row rank state by id into the same buckets once per run, so
+  every sweep's scatter join is partition-local: neither the |E|-row edge
+  table nor the state is re-shuffled or broadcast, and the only per-sweep
+  shuffle is the gather by dst.
 - G4 sinks: out-degree-0 nodes (reference Graph.cpp:107-115) — kept as a
   boolean on the node table so the per-iteration sink-mass aggregation
   needs no join at all.
@@ -36,6 +37,7 @@ class GraphTables:
     num_nodes: int
     num_edges: int  # multigraph edge count (sum of w)
     num_sinks: int
+    partitions: int  # hash buckets of adj (by src) and nodes (by id)
     num_adj_rows: int = 0  # distinct (src,dst) pairs actually iterated
     id_type: str = "long"  # narrow int layout when max id < 2^31
     salt_buckets: int = 1  # auto-chosen from the in-degree distribution
@@ -96,8 +98,8 @@ def build_graph(
 
     ``partitions`` pins the adjacency partition count (defaults to the
     session's shuffle partitions). At cluster scale this is where you size
-    partitions so each holds O(100-500MB) of edges; the rank-state side of
-    every iteration then hash-shuffles |V| rows to meet this layout.
+    partitions so each holds O(100-500MB) of edges; PageRank partitions its
+    rank state into the same buckets once and keeps it there.
 
     ``weight_col`` names an integer edge-weight column for PRE-weighted
     edge tables (e.g. the host-graph collapse, where weight = collapsed
@@ -192,6 +194,7 @@ def build_graph(
         num_nodes=int(counts["n"]),
         num_edges=int(edge_counts["e"]),
         num_sinks=int(counts["s"]),
+        partitions=p,
         num_adj_rows=num_adj_rows,
         id_type=id_t,
         salt_buckets=salt,

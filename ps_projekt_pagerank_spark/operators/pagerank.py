@@ -23,36 +23,44 @@ P7 counter   returned iteration count includes it    (Graph.cpp:133,172)
 Scale design (the part the reference solves with CSR + OpenMP dynamic
 scheduling, SURVEY.md §4):
 
-- the |E|-row adjacency is partitioned ONCE (build_graph) and never
-  re-shuffled; each iteration shuffles only the |V|-row state — and at
-  small |V| Catalyst broadcasts the state, so the scatter join moves
-  nothing at all;
+- the |E|-row adjacency is partitioned ONCE by src (build_graph) and never
+  re-shuffled; the |V|-row rank state is hash-partitioned by id into the
+  same ``g.partitions`` buckets ONCE, when the loop starts, and every
+  sweep keeps it there — so the scatter join (state ⋈ adj on src) and the
+  commit join (state ⟕ gathered on id) are both partition-local and the
+  only shuffle of a sweep is the gather by dst. Both joins carry a
+  ``shuffle_hash`` hint, so Catalyst never broadcasts the state: a
+  broadcast is one more job per sweep and re-sends all |V| rows;
 - the gather is a hash aggregation with automatic partial (map-side)
   combine, which already collapses each partition's contributions to one
   row per distinct dst before the shuffle; for pathological hub skew
   ``salt_buckets`` adds an explicit two-stage aggregation
-  (groupBy(dst, salt) → groupBy(dst)), the reference's dynamic-schedule
-  analogue (Graph.cpp:206);
-- exactly ONE action per iteration (a single stats collect that also
-  materializes the persisted new state) — the same "device→host scalar
-  per iteration" shape as the reference GPU path;
-- lineage is truncated every ``checkpoint_every`` iterations via
-  localCheckpoint (or durably via sources.checkpoint for resume).
+  (groupBy(dst, salt) → groupBy(dst), one more shuffle), the reference's
+  dynamic-schedule analogue (Graph.cpp:206);
+- the loop runs with AQE off and ``spark.sql.shuffle.partitions`` pinned
+  to ``g.partitions`` (both restored on exit): AQE submits every query
+  stage as its own job, and a localCheckpoint planned under AQE reports
+  unknown partitioning, which would re-shuffle the state every sweep.
+  Inside the loop, skew is the explicit ``salt_buckets``' job;
+- exactly ONE Spark job per sweep: the eager localCheckpoint that
+  truncates lineage also publishes the sweep's (active count, Σ sink
+  rank) through an Observation — the same "device→host scalar per
+  iteration" shape as the reference GPU path (Graph4CL.cpp:166-181);
+- durable snapshots for resume go through sources.checkpoint (one write
+  job per sweep).
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .. import DAMPING, NORTH_EPSILON
 from .graph import GraphTables, build_graph
-
-_STATE_COLS = ["id", "outdeg", "is_sink", "rank", "active"]
 
 
 @dataclass
@@ -62,39 +70,79 @@ class PageRankResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _stats(state: DataFrame) -> tuple[int, float]:
-    """One action: (active node count, Σ rank over sinks)."""
-    row = state.agg(
+@contextmanager
+def _co_partitioned_loop(spark: SparkSession, partitions: int):
+    """Session settings under which the rank state keeps the adjacency's
+    hash partitioning across sweeps: AQE off, shuffle partitions equal to
+    the adjacency's. The previous values are restored on exit, also when
+    the loop raises."""
+    conf = spark.conf
+    keys = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(partitions),
+    }
+    saved = {k: conf.get(k) for k in keys}
+    for k, v in keys.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
+def _loop_state(
+    g: GraphTables, start: DataFrame, rank: F.Column, active: F.Column | None = None
+) -> DataFrame:
+    """The loop's state layout over ``start`` (id, outdeg, is_sink, ...):
+    ids in the adjacency's id type, hash-partitioned by id into
+    ``g.partitions`` — the layout ``g.adj`` has by src, so the scatter join
+    needs no exchange (Murmur3 hashes int and long differently, hence the
+    cast before the repartition)."""
+    return start.select(
+        F.col("id").cast(g.id_type).alias("id"),
+        F.col("outdeg").cast(g.id_type).alias("outdeg"),
+        "is_sink",
+        rank.alias("rank"),
+        (F.lit(True) if active is None else active).alias("active"),
+    ).repartition(g.partitions, "id")
+
+
+def _materialize(state: DataFrame, name: str) -> tuple[DataFrame, int, float]:
+    """One job: checkpoint ``state`` (lineage cut, partitioning kept) and
+    read (active node count, Σ rank over sinks) off the same pass."""
+    obs = Observation(name)
+    state = state.observe(
+        obs,
         F.sum(F.col("active").cast("long")).alias("n_active"),
         F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)).alias(
             "sink_rank"
         ),
-    ).first()
-    return int(row["n_active"] or 0), float(row["sink_rank"] or 0.0)
+    ).localCheckpoint(eager=True)
+    row = obs.get
+    return state, int(row["n_active"] or 0), float(row["sink_rank"] or 0.0)
 
 
 def _step(
     state: DataFrame,
     adj: DataFrame,
-    sink_sum,
+    sink_sum: float,
     damping: float,
     delta: float,
     salt_buckets: int,
 ) -> DataFrame:
     """One Jacobi sweep: scatter-join + gather-agg + freeze-commit.
 
-    ``sink_sum`` is a Python float (driver-known scalar) or a Column (the
-    in-plan scalar used by multi-sweep blocks, where sweep j+1's sink mass
-    is only known inside the fused plan)."""
-    if not isinstance(sink_sum, F.Column):
-        sink_sum = F.lit(sink_sum)
+    The ``shuffle_hash`` hints keep both joins partition-local over the
+    co-partitioned state (see the module docstring); the gather by dst is
+    the sweep's one exchange."""
     ranks_src = state.select(
         F.col("id").alias("src_id"), "rank", F.col("outdeg").alias("od")
     ).where(F.col("od") > 0)
 
-    contribs = adj.join(ranks_src, adj["src"] == ranks_src["src_id"]).select(
-        "dst", (F.col("w") * F.col("rank") / F.col("od")).alias("c")
-    )
+    contribs = adj.join(
+        ranks_src.hint("shuffle_hash"), adj["src"] == ranks_src["src_id"]
+    ).select("dst", (F.col("w") * F.col("rank") / F.col("od")).alias("c"))
 
     if salt_buckets > 1:
         # explicit two-stage agg for hub skew: partial per (dst, salt),
@@ -111,11 +159,13 @@ def _step(
     else:
         gathered = contribs.groupBy("dst").agg(F.sum("c").alias("contrib"))
 
-    new_rank = sink_sum + F.lit(damping) * F.coalesce(
+    new_rank = F.lit(sink_sum) + F.lit(damping) * F.coalesce(
         F.col("contrib"), F.lit(0.0)
     )
     return (
-        state.join(gathered, state["id"] == gathered["dst"], "left")
+        state.join(
+            gathered.hint("shuffle_hash"), state["id"] == gathered["dst"], "left"
+        )
         .select(
             "id",
             "outdeg",
@@ -138,7 +188,6 @@ def pagerank(
     checkpointer=None,
     graph: GraphTables | None = None,
     partitions: int | None = None,
-    block_size: int = 1,
     init_ranks: DataFrame | None = None,
 ) -> PageRankResult:
     """Run frozen-node PageRank to convergence.
@@ -153,24 +202,12 @@ def pagerank(
     derived from the in-degree distribution (1 on uniform graphs — see
     graph.build_graph); pass an int to override.
 
-    ``block_size`` fuses that many sweeps into one Spark action (in-plan
-    sink-mass scalars via broadcast 1-row aggregates); >1 trades up to
-    ``block_size - 1`` wasted post-convergence sweeps for (block-1) fewer
-    driver round-trips per block. Iteration counts and ranks are invariant
-    to the choice (parity-tested). MEASURED on the sf0.1 headline at
-    local[32]: block_size=4 is ~1.3-1.9x SLOWER than 1 (the lazy-checkpoint
-    cascade serializes each sweep behind its broadcast stage and the
-    per-iteration driver latency it removes is not the bottleneck there),
-    so the default stays 1; the knob exists for deployments where driver
-    round-trip latency dominates sweep compute.
+    A negative ``epsilon`` never freezes a node, so exactly
+    ``max_iterations`` sweeps run (``pagerank_fixed``).
 
     ``checkpointer`` (sources.checkpoint.IterationCheckpointer) durably
-    writes rank vectors + metrics and enables resume; with or without it,
-    lineage is truncated in-memory every iteration (see the loop body
-    comment). NOTE: snapshots land once per Spark action — i.e. once per
-    *block*. With block_size > 1 only the block-final state is durably
-    written (resume granularity = block), and per-sweep `seconds` is the
-    block wall-clock averaged over the sweeps actually run.
+    writes rank vectors + metrics after every sweep and enables resume;
+    with or without it, lineage is truncated in-memory every sweep.
     """
     own_graph = graph is None
     g = graph or build_graph(edges, partitions)
@@ -181,150 +218,50 @@ def pagerank(
         return PageRankResult(ranks=g.nodes.select("id", F.lit(0.0).alias("rank")),
                               iterations=0)
 
-    # loop state mirrors the adjacency's (possibly int32) id layout so the
-    # per-iteration scatter join keys match without casts; the public
-    # result schema is cast back to LongType at the end
-    if init_ranks is not None:
+    spark = g.nodes.sparkSession
+    start_iter = 0
+    resumed = checkpointer.latest(spark) if checkpointer is not None else None
+    if resumed is not None:
+        start_iter, ck = resumed
+        start = _loop_state(g, ck, F.col("rank"), F.col("active"))
+    elif init_ranks is not None:
         init = init_ranks.select(
             F.col("id").cast(g.id_type).alias("iid"),
             F.col("rank").alias("init_rank"),
         )
-        state = (
-            g.nodes.join(init, g.nodes["id"] == init["iid"], "left")
-            .select(
-                F.col("id").cast(g.id_type).alias("id"),
-                F.col("outdeg").cast(g.id_type).alias("outdeg"),
-                "is_sink",
-                F.coalesce("init_rank", F.lit(1.0 / n)).alias("rank"),
-                F.lit(True).alias("active"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        start = _loop_state(
+            g,
+            g.nodes.join(init, g.nodes["id"] == init["iid"], "left"),
+            F.coalesce("init_rank", F.lit(1.0 / n)),
         )
     else:
-        state = g.nodes.select(
-            F.col("id").cast(g.id_type).alias("id"),
-            F.col("outdeg").cast(g.id_type).alias("outdeg"),
-            "is_sink",
-            F.lit(1.0 / n).alias("rank"),
-            F.lit(True).alias("active"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        start = _loop_state(g, g.nodes, F.lit(1.0 / n))
 
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.latest(state.sparkSession)
-        if resumed is not None:
-            start_iter, ck = resumed
-            state = ck.select(
-                F.col("id").cast(g.id_type).alias("id"),
-                F.col("outdeg").cast(g.id_type).alias("outdeg"),
-                "is_sink",
-                "rank",
-                "active",
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    n_active, sink_rank = _stats(state)
     iterations = start_iter
     metrics: list[dict] = []
-
-    _OBS_COLS = (
-        F.sum(F.col("active").cast("long")).alias("n_active"),
-        F.sum(
-            F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)
-        ).alias("sink_rank"),
-    )
-
-    converged = False
-    while iterations < max_iterations and not converged:
-        t0 = time.perf_counter()
-        if n_active == 0:
-            iterations += 1  # final empty sweep counted (Graph.cpp:133,158)
-            break
-
-        # Fuse up to `block_size` sweeps into ONE action. Sweep 0 uses the
-        # driver-known sink mass; each later sweep computes it IN-PLAN as a
-        # broadcast 1-row aggregate of the previous sweep's frame — the
-        # previous frame is lazily localCheckpointed, so the agg branch and
-        # the scatter branch share one cached computation instead of
-        # doubling the plan. Only the LAST frame carries an Observation:
-        # metrics nodes on intermediate frames would sit behind the
-        # checkpoint RDD boundary, outside the final action's query plan,
-        # and never publish. The win over block_size=1 is (block-1) fewer
-        # driver round-trips per block — the fixed cost the reference GPU
-        # loop pays once per iteration as a device->host transfer
-        # (Graph4CL.cpp:166-181). Sweeps past convergence inside a block
-        # are identity (frozen nodes keep their rank, active stays false),
-        # so ranks are unaffected; when the block-end observation reports
-        # 0 active, the exact convergence sweep is pinpointed with cheap
-        # aggregations over the already-cached intermediate frames and the
-        # reference's counting rule (empty sweep counted) replays exactly.
-        block = min(block_size, max_iterations - iterations)
-        cur = state
-        frames = []
-        obs = Observation(f"pr_block_{iterations}")
-        for j in range(block):
-            if j == 0:
-                ss = ((1.0 - damping) + damping * sink_rank) / n
-            else:
-                sr = cur.agg(
-                    F.sum(
-                        F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)
-                    ).alias("sr")
-                )
-                cur = cur.crossJoin(F.broadcast(sr))
-                ss = (
-                    F.lit(1.0 - damping) + F.lit(damping) * F.col("sr")
-                ) / F.lit(float(n))
-            stepped = _step(cur, g.adj, ss, damping, epsilon, salt_buckets)
-            if j == block - 1:
-                stepped = stepped.observe(obs, *_OBS_COLS)
-            cur = stepped.localCheckpoint(eager=(j == block - 1))
-            frames.append(cur)
-
-        block_dt = time.perf_counter() - t0
-        state.unpersist()
-        state = cur
-        row = obs.get
-        n_active = int(row["n_active"] or 0)
-        sink_rank = float(row["sink_rank"] or 0.0)
-
-        ran = block
-        if n_active == 0 and block > 1:
-            # pinpoint the first converged sweep (cached frames, |V|-row
-            # aggs — no scatter recompute); iterations past it were
-            # identity sweeps and are NOT counted
-            for j, f in enumerate(frames[:-1]):
-                if int(
-                    f.agg(
-                        F.sum(F.col("active").cast("long")).alias("a")
-                    ).first()["a"]
-                    or 0
-                ) == 0:
-                    ran = j + 1
-                    break
-        # block-internal frames were materialized into the cache for the
-        # pinpoint aggs; only the block-final `state` lives on
-        for f in frames[:-1]:
-            f.unpersist()
-        iterations += ran
-        for j in range(ran):
+    with _co_partitioned_loop(spark, g.partitions):
+        state, n_active, sink_rank = _materialize(start, "pr_start")
+        while iterations < max_iterations:
+            if n_active == 0:
+                iterations += 1  # final empty sweep counted (Graph.cpp:133,158)
+                break
+            t0 = time.perf_counter()
+            sink_sum = ((1.0 - damping) + damping * sink_rank) / n
+            state, n_active, sink_rank = _materialize(
+                _step(state, g.adj, sink_sum, damping, epsilon, salt_buckets),
+                f"pr_sweep_{iterations}",
+            )
+            iterations += 1
             metrics.append(
                 {
-                    "iteration": iterations - ran + j + 1,
+                    "iteration": iterations,
                     "edges": g.num_edges,
-                    "seconds": block_dt / ran,
-                    "block": block,
-                    **(
-                        {"n_active": n_active} if j == ran - 1 else {}
-                    ),
+                    "seconds": time.perf_counter() - t0,
+                    "n_active": n_active,
                 }
             )
-        if n_active == 0:
-            # the NEXT sweep is the counted empty one (if the cap allows)
-            if iterations < max_iterations:
-                iterations += 1
-            converged = True
-        if checkpointer is not None and metrics:
-            checkpointer.write(metrics[-1]["iteration"], state, metrics[-1])
+            if checkpointer is not None:
+                checkpointer.write(iterations, state, metrics[-1])
 
     ranks = state.select(F.col("id").cast("long").alias("id"), "rank")
     if own_graph:
@@ -429,32 +366,17 @@ def pagerank_fixed(
     to the first freeze, and exactly expressible as unrolled ANSI SQL
     (the DuckDB oracle in __spark_entry__ uses the same unrolling).
     ``salt_buckets`` defaults to build_graph's distribution-derived choice.
+    Runs ``pagerank``'s loop with a negative epsilon, under which no node
+    ever freezes.
     """
-    own_graph = graph is None
-    g = graph or build_graph(edges)
-    if salt_buckets is None:
-        salt_buckets = g.salt_buckets
-    n = g.num_nodes
-    state = g.nodes.select(
-        F.col("id").cast(g.id_type).alias("id"),
-        F.col("outdeg").cast(g.id_type).alias("outdeg"),
-        "is_sink",
-        F.lit(1.0 / n).alias("rank"),
-        F.lit(True).alias("active"),
-    )
-    for _ in range(num_iterations):
-        row = state.agg(
-            F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)).alias("s")
-        ).first()
-        sink_sum = ((1.0 - damping) + damping * float(row["s"] or 0.0)) / n
-        state = _step(
-            state, g.adj, sink_sum, damping, delta=-1.0,
-            salt_buckets=salt_buckets,
-        ).localCheckpoint(eager=True)  # lineage truncation, see pagerank()
-    out = state.select(F.col("id").cast("long").alias("id"), "rank")
-    if own_graph:
-        g.unpersist()
-    return out
+    return pagerank(
+        edges,
+        damping,
+        epsilon=-1.0,
+        max_iterations=num_iterations,
+        graph=graph,
+        salt_buckets=salt_buckets,
+    ).ranks
 
 
 def pagerank_personalized_batch(

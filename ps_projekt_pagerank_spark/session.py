@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's memory, at most 64g: a heap sized past physical
+    memory lets a long-lived local JVM grow until the OS kills it."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = int(next(ln for ln in f if ln.startswith("MemTotal")).split()[1])
+    except (OSError, StopIteration, ValueError):
+        return "64g"
+    return f"{max(1024, min(64 * 1024, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "ps-projekt-pagerank-spark",
     cores: int | None = None,
@@ -43,7 +54,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # a K=6-scale graph build under CPU steal can hold a broadcast

@@ -67,14 +67,19 @@ def load_graph(spark: SparkSession, name: str) -> GraphTables:
     num_adj_rows = int(ec["r"] or 0)
     max_dst_rows = int(ec["max_dst_rows"] or 0)
     n_dst = int(ec["n_dst"] or 1)
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    salt = derive_salt_buckets(num_adj_rows, max_dst_rows, n_dst, p)
+    buckets = int(
+        spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
+        .where(F.col("col_name") == "Num Buckets")
+        .first()["data_type"]
+    )
+    salt = derive_salt_buckets(num_adj_rows, max_dst_rows, n_dst, buckets)
     return GraphTables(
         nodes=nodes,
         adj=adj,
         num_nodes=int(counts["n"]),
         num_edges=int(ec["e"]),
         num_sinks=int(counts["s"]),
+        partitions=buckets,
         num_adj_rows=num_adj_rows,
         id_type=dict(adj.dtypes)["src"],
         salt_buckets=salt,

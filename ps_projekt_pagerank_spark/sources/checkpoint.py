@@ -34,6 +34,7 @@ import json
 import os
 import re
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +51,25 @@ def iceberg_catalogs(spark: SparkSession) -> list[str]:
         if m and val in _ICEBERG_IMPLS:
             out.append(m.group(1))
     return sorted(out)
+
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet")
+
+
+def _footer_partition_rows(path: str) -> dict[int, int]:
+    """Rows per non-empty partition of the state just written to ``path``,
+    read from the parquet footers with no Spark job: each write task names
+    its files ``part-<partition id>-...`` (an all-empty write leaves one
+    empty file, which is skipped)."""
+    rows: dict[int, int] = {}
+    for name in os.listdir(path):
+        m = _PART_FILE.fullmatch(name)
+        if m:
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            if n:
+                pid = int(m.group(1))
+                rows[pid] = rows.get(pid, 0) + n
+    return rows
 
 
 class IterationCheckpointer:
@@ -78,20 +98,22 @@ class IterationCheckpointer:
     # -- write path ---------------------------------------------------------
 
     def write(self, iteration: int, state: DataFrame, metrics: dict) -> None:
-        # per-partition lineage: rows per shuffle partition of the state
-        part_rows = (
-            state.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .collect()
-        )
         rec = dict(metrics)
-        rec["partition_rows"] = {int(r["pid"]): int(r["count"]) for r in part_rows}
-
         if self.table is not None:
+            # per-partition lineage: rows per shuffle partition of the state
+            part_rows = (
+                state.groupBy(F.spark_partition_id().alias("pid"))
+                .count()
+                .collect()
+            )
+            rec["partition_rows"] = {
+                int(r["pid"]): int(r["count"]) for r in part_rows
+            }
             self._write_iceberg(iteration, state, rec)
             return
         path = os.path.join(self.base_dir, "ranks", f"iter={iteration}")
         state.write.mode("overwrite").parquet(path)
+        rec["partition_rows"] = _footer_partition_rows(path)
         # mark complete only after both writes (crash between = ignored dir)
         with open(self._metrics_path, "a") as f:
             f.write(json.dumps(rec) + "\n")

@@ -175,22 +175,105 @@ def test_auto_salt_engages_on_hub_and_matches_unsalted(spark):
     g_uniform.unpersist()
 
 
-@pytest.mark.parametrize("block", [2, 3, 4])
-def test_multi_sweep_block_parity(spark, block):
-    """block_size must not change iteration counts or ranks — the fused
-    in-plan sink-mass scalars and the reference's per-sweep counting rule
-    (empty sweep counted) must survive blocking."""
-    edges = edges_from_pairs(spark, FIXTURE_GRAPHS["mini"])
-    base = pagerank(edges, epsilon=1e-6, max_iterations=100, block_size=1)
-    blocked = pagerank(
-        edges, epsilon=1e-6, max_iterations=100, block_size=block
+def _jobs_so_far(spark) -> int:
+    """Spark jobs this application has started (ids are sequential)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return 0 if jobs.isEmpty() else jobs.head().jobId() + 1
+
+
+def _physical_nodes(plan) -> list[str]:
+    """Class names of every node of a physical plan, root first."""
+    out = [plan.getClass().getSimpleName()]
+    it = plan.children().iterator()
+    while it.hasNext():
+        out += _physical_nodes(it.next())
+    return out
+
+
+def test_one_job_per_sweep(spark):
+    """The loop checkpoints the start state and every sweep in one job
+    each; nothing else (stats, broadcasts, AQE stages) may add jobs."""
+    g = build_graph(edges_from_pairs(spark, tripled_k(MINI_EDGES, 2)))
+    before = _jobs_so_far(spark)
+    res = pagerank(None, epsilon=NORTH_EPSILON, graph=g)
+    ran = _jobs_so_far(spark) - before
+    assert res.iterations > 5
+    assert ran <= res.iterations + 2, (ran, res.iterations)
+    g.unpersist()
+
+
+def test_sweep_plan_one_exchange_no_broadcast(spark):
+    """A sweep over the co-partitioned state shuffles only the gather by
+    dst: the scatter and commit joins read the src-partitioned adjacency
+    and the id-partitioned state in place, and nothing is broadcast."""
+    from pyspark.sql import functions as F
+
+    from ps_projekt_pagerank_spark.operators.pagerank import (
+        _co_partitioned_loop,
+        _loop_state,
+        _materialize,
+        _step,
     )
-    assert blocked.iterations == base.iterations
-    a = {r["id"]: r["rank"] for r in base.ranks.collect()}
-    b = {r["id"]: r["rank"] for r in blocked.ranks.collect()}
-    assert a.keys() == b.keys()
-    for nid in a:
-        assert math.isclose(a[nid], b[nid], abs_tol=1e-12), nid
+
+    g = build_graph(edges_from_pairs(spark, MINI_EDGES), partitions=3)
+    with _co_partitioned_loop(spark, g.partitions):
+        state, _, _ = _materialize(
+            _loop_state(g, g.nodes, F.lit(1.0 / g.num_nodes)), "plan_test"
+        )
+        sweep = _step(state, g.adj, 0.1, 0.85, NORTH_EPSILON, 1)
+        nodes = _physical_nodes(sweep._jdf.queryExecution().executedPlan())
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes
+    assert "BroadcastExchangeExec" not in nodes, nodes
+    assert nodes.count("ShuffledHashJoinExec") == 2, nodes
+    g.unpersist()
+
+
+class _FailingCheckpointer:
+    def latest(self, spark):
+        return None
+
+    def write(self, iteration, state, metrics):
+        raise RuntimeError("snapshot store down")
+
+
+def test_loop_restores_session_conf(spark):
+    """AQE and shuffle partitions read the same after pagerank() as
+    before, also when the loop raises from a checkpoint write."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    # 3 partitions differ from the session's, so a leak would show
+    g = build_graph(edges_from_pairs(spark, MINI_EDGES), partitions=3)
+    pagerank(None, epsilon=NORTH_EPSILON, graph=g)
+    assert {k: spark.conf.get(k) for k in keys} == before
+    with pytest.raises(RuntimeError, match="snapshot store down"):
+        pagerank(None, graph=g, checkpointer=_FailingCheckpointer())
+    assert {k: spark.conf.get(k) for k in keys} == before
+    g.unpersist()
+
+
+def test_checkpoint_partition_rows_match_groupby(spark, tmp_path):
+    """partition_rows is read from the written files' parquet footers; it
+    must equal the per-partition row counts of the state that was written,
+    empty partitions left out as the groupBy leaves them out."""
+    from pyspark.sql import functions as F
+
+    from ps_projekt_pagerank_spark.sources.checkpoint import IterationCheckpointer
+
+    state = spark.range(5).repartition(8, "id")
+    want = {
+        int(r["pid"]): int(r["count"])
+        for r in state.groupBy(F.spark_partition_id().alias("pid"))
+        .count()
+        .collect()
+    }
+    assert len(want) < 8  # some partitions are empty
+    cp = IterationCheckpointer(str(tmp_path / "ck"))
+    cp.write(1, state, {"iteration": 1})
+    got = {int(k): v for k, v in cp.metrics()[-1]["partition_rows"].items()}
+    assert got == want
+    assert cp.latest(spark)[1].count() == 5
 
 
 def test_checkpointer_backend_selection(spark, tmp_path):

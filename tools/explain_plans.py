@@ -20,7 +20,12 @@ from pyspark.sql import functions as F  # noqa: E402
 from ps_projekt_pagerank_spark import NORTH_EPSILON  # noqa: E402
 from ps_projekt_pagerank_spark.operators import dedup as dd  # noqa: E402
 from ps_projekt_pagerank_spark.operators.graph import build_graph  # noqa: E402
-from ps_projekt_pagerank_spark.operators.pagerank import _step  # noqa: E402
+from ps_projekt_pagerank_spark.operators.pagerank import (  # noqa: E402
+    _co_partitioned_loop,
+    _loop_state,
+    _materialize,
+    _step,
+)
 from ps_projekt_pagerank_spark.operators.triangles import (  # noqa: E402
     triangles_total,
 )
@@ -33,6 +38,16 @@ def formatted(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def physical_nodes(plan) -> list[str]:
+    """Class names of every node of a JVM physical plan, root first
+    (cached relations are leaves: their own plan ran when cached)."""
+    out = [plan.getClass().getSimpleName()]
+    it = plan.children().iterator()
+    while it.hasNext():
+        out += physical_nodes(it.next())
+    return out
 
 
 def partitionless_windows(plan: str) -> list[str]:
@@ -86,22 +101,30 @@ def main():
         formatted(edges),
     ))
 
-    # 2. one PageRank sweep over the built graph
+    # 2. one PageRank sweep over the built graph, planned the way the
+    #    loop plans it: co-partitioned state, AQE off
     g = build_graph(edges)
-    state = g.nodes.select(
-        "id", "outdeg", "is_sink",
-        F.lit(1.0 / g.num_nodes).alias("rank"), F.lit(True).alias("active"),
+    with _co_partitioned_loop(spark, g.partitions):
+        state, _, _ = _materialize(
+            _loop_state(g, g.nodes, F.lit(1.0 / g.num_nodes)), "explain"
+        )
+        step = _step(state, g.adj, sink_sum=0.1, damping=0.85,
+                     delta=NORTH_EPSILON, salt_buckets=1)
+        sweep_plan = formatted(step)
+        nodes = physical_nodes(step._jdf.queryExecution().executedPlan())
+    assert nodes.count("ShuffleExchangeExec") == 1, (
+        "a sweep may shuffle only the gather by dst"
     )
-    step = _step(state, g.adj, sink_sum=0.1, damping=0.85,
-                 delta=NORTH_EPSILON, salt_buckets=1)
+    assert "BroadcastExchangeExec" not in nodes
     sections.append((
         "PageRank sweep (scatter join + gather agg + commit)",
-        "The |E|-row adjacency side must NOT re-shuffle (it is "
-        "pre-partitioned by src and cached); the |V|-row rank state is the "
-        "broadcast/shuffled side. The gather is a two-phase HashAggregate "
-        "(partial_sum before the exchange = map-side combine). All "
-        "stages inside WholeStageCodegen.",
-        formatted(step),
+        "Exactly one exchange: the gather by dst (asserted). The |E|-row "
+        "adjacency (cached, hash-partitioned by src) and the |V|-row rank "
+        "state (hash-partitioned by id into the same buckets) are read in "
+        "place by two ShuffledHashJoins; nothing is broadcast (asserted). "
+        "The gather is a two-phase HashAggregate (partial_sum before the "
+        "exchange = map-side combine). All stages inside WholeStageCodegen.",
+        sweep_plan,
     ))
 
     # 3. triangle counting: canonicalize -> wedge join -> semi-close
